@@ -149,94 +149,6 @@ object ScaleSmoke {
       }
       time("lsh_cands_composed") { candStage(native = false) }
       time("lsh_cands_native") { candStage(native = true) }
-      // A/B the semantic-dedup VERIFY stage alone, composed cluster
-      // self-join vs the native unary cluster-pairs node, over a
-      // synthetic labeled frame big enough to exceed the broadcast
-      // threshold — the SMJ regime the node targets (at fixture scale
-      // the self-join broadcasts and the node's forced Exchange loses;
-      // see PROFILE_r12). 4000·n vectors, 128 clusters, 64-dim.
-      var cpComposed = -1L
-      def clusterVerify(native: Boolean): Long = {
-        val labeled = spark.range(0, 4000L * n).selectExpr(
-          "id AS vec_id",
-          "CAST(id % 128 AS INT) AS cluster",
-          "transform(sequence(0, 63), j -> " +
-            "CAST((id % 97) * (j + 3) % 31 - 15 AS FLOAT)) AS emb")
-        val tau = 0.95
-        val c =
-          if (native) {
-            import org.apache.spark.sql.catalyst.expressions.{
-              Expression, GreaterThanOrEqual, Literal, Round}
-            // production shape: threshold pushed INTO the node
-            val pred = (a: Expression, b: Expression) =>
-              GreaterThanOrEqual(
-                Round(graft.plans.ArrayCosineSim(a, b), Literal(6)),
-                Literal(tau)): Expression
-            graft.plans.ClusterPairsNative
-              .clusterPairs(labeled, "cluster", "vec_id", "emb", Some(pred))
-              .count()
-          }
-          else {
-            val a = labeled.select(col("cluster"), col("vec_id").as("_id_a"),
-              col("emb").as("_emb_a"))
-            val b = labeled.select(col("cluster"), col("vec_id").as("_id_b"),
-              col("emb").as("_emb_b"))
-            a.join(b, Seq("cluster"))
-              .where(col("_id_a") < col("_id_b") &&
-                round(graft.operators.Similarity
-                  .cosine(col("_emb_a"), col("_emb_b")), 6) >= tau)
-              .count()
-          }
-        graft.core.Caches.releaseAll()
-        c
-      }
-      // pure ENUMERATION contrast (no cosine): isolates pair-emission
-      // machinery from predicate evaluation
-      def clusterEnum(native: Boolean): Long = {
-        val labeled = spark.range(0, 4000L * n).selectExpr(
-          "id AS vec_id",
-          "CAST(id % 128 AS INT) AS cluster",
-          "transform(sequence(0, 63), j -> " +
-            "CAST((id % 97) * (j + 3) % 31 - 15 AS FLOAT)) AS emb")
-        val c =
-          if (native) graft.plans.ClusterPairsNative
-            .clusterPairs(labeled, "cluster", "vec_id", "emb")
-            .select(col("id_a")).count()
-          else {
-            val a = labeled.select(col("cluster"), col("vec_id").as("_id_a"),
-              col("emb").as("_emb_a"))
-            val b = labeled.select(col("cluster"), col("vec_id").as("_id_b"),
-              col("emb").as("_emb_b"))
-            a.join(b, Seq("cluster")).where(col("_id_a") < col("_id_b"))
-              .select(col("_id_a")).count()
-          }
-        graft.core.Caches.releaseAll()
-        c
-      }
-      time("cluster_enum_composed") { clusterEnum(false) }
-      time("cluster_enum_native") { clusterEnum(true) }
-      time("cluster_verify_composed") { cpComposed = clusterVerify(false); cpComposed }
-      // the same composed join with broadcast DISABLED — the regime a
-      // 100 TB labeled frame is actually in (too big to broadcast, so
-      // the self-join pays two exchanges + two sorts + SMJ); this is
-      // the regime the native node replaces
-      time("cluster_verify_composed_smj") {
-        val key = "spark.sql.autoBroadcastJoinThreshold"
-        val old = spark.conf.get(key)
-        spark.conf.set(key, "-1")
-        try {
-          val c = clusterVerify(false)
-          require(cpComposed < 0 || c == cpComposed,
-            s"SMJ verify count $c != composed $cpComposed")
-          c
-        } finally spark.conf.set(key, old)
-      }
-      time("cluster_verify_native") {
-        val c = clusterVerify(true)
-        require(cpComposed < 0 || c == cpComposed,
-          s"native verify count $c != composed $cpComposed")
-        c
-      }
       var uncapped = -1L
       time("lsh_mega_bucket_uncapped") { uncapped = candCount(0); uncapped }
       time("lsh_mega_bucket_cap64") {

@@ -491,47 +491,6 @@ object Similarity {
     expandKeptFlags(labeled, dropped, idCol)
   }
 
-  /** [[semanticDedup]] with the within-cluster pair verify routed
-    * through the unary [[graft.plans.ClusterPairsNative]] node
-    * instead of the cluster-key self-join: the labeled frame is
-    * exchanged ONCE (the self-join pays two Exchanges and two sorts
-    * of the same corpus-shaped table) and each cluster's ordered
-    * pairs stream out of one clustered-sorted pass. The cosine
-    * predicate stays the identical codegen'd [[graft.plans
-    * .ArrayCosineSim]] Filter above the node, so the result is
-    * bit-identical to the composed query — same oracle, one fewer
-    * corpus Exchange. */
-  def semanticDedupNative(df: DataFrame, idCol: String, embCol: String,
-                          k: Int, iters: Int, tau: Double,
-                          roundTo: Int = 6): DataFrame = {
-    val labeled = Clustering.lloydExactAssign(df, idCol, embCol, k, iters)
-      .select(col(idCol), col(embCol), col("cluster"))
-    expandKeptFlags(labeled, nativeDropped(labeled, idCol, embCol,
-      tau, roundTo), idCol)
-  }
-
-  /** Within-cluster smaller-id-neighbor drop set via the native
-    * cluster-pairs node; shared by [[semanticDedupNative]] and the
-    * production [[semanticDedupScalable]]. */
-  private def nativeDropped(labeled: DataFrame, idCol: String,
-                            embCol: String, tau: Double,
-                            roundTo: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      Expression, GreaterThanOrEqual, Literal, Round}
-    // the cosine threshold is PUSHED INTO the node (evaluated on the
-    // reused pair row before any payload materialization); its
-    // interpreted eval is the same ArrayCosineSim/Round/>= chain the
-    // codegen'd .where form runs, so the drop set is bit-identical —
-    // which the shared oracle gates
-    val pred = (a: Expression, b: Expression) =>
-      GreaterThanOrEqual(
-        Round(graft.plans.ArrayCosineSim(a, b), Literal(roundTo)),
-        Literal(tau)): Expression
-    graft.plans.ClusterPairsNative
-      .clusterPairs(labeled, "cluster", idCol, embCol, Some(pred))
-      .select(col("id_b").as(idCol)).distinct()
-  }
-
   private def expandKeptFlags(labeled: DataFrame, dropped: DataFrame,
                               idCol: String): DataFrame =
     labeled.select(col(idCol), col("cluster"))
@@ -579,15 +538,10 @@ object Similarity {
         fam, idCol, embCol, "_mult", k, iters,
         initFrom = Some(df.select(col(idCol), col(embCol))))
       .select(col(idCol), col(embCol), col("cluster"))
-    // PRODUCTION verify path: the composed cluster self-join. Measured
-    // against the native cluster-pairs node (ScaleSmoke
-    // cluster_{enum,verify}_* at 25 M pairs): whole-stage-codegen'd
-    // join+filter enumerates AND verifies pairs 2-4x faster than the
-    // node's per-pair virtual predicate eval, in BOTH the broadcast
-    // and the forced-SMJ regime — so the node stays the gated
-    // capability (q_dedup_semantic_native) and the plan the optimizer
-    // owns stays the production path. Memory is equivalent (both
-    // buffer one cluster's rows/values per task).
+    // verify via the composed cluster self-join: at 25 M pairs its
+    // whole-stage-codegen'd join+filter measured 2-4x faster than a
+    // native pair node, in both the broadcast and the sort-merge
+    // regime (PROFILE_r12 §8)
     val a = labeled.select(col("cluster"), col(idCol).as("_id_a"),
       col(embCol).as("_emb_a"))
     val b = labeled.select(col("cluster"), col(idCol).as("_id_b"),

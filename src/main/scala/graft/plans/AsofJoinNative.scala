@@ -151,10 +151,9 @@ case class AsofJoinExec(
   }
 }
 
-/** Plans [[AsofJoinPlan]] to [[AsofJoinExec]]; injected via
-  * `spark.experimental.extraStrategies` (public API) by
-  * [[AsofJoinNative.asofJoin]], or via SparkSessionExtensions by
-  * [[GraftExtensions]]. */
+/** Plans [[AsofJoinPlan]] to [[AsofJoinExec]]; registered by
+  * [[AsofJoinNative.asofJoin]] through [[NativeStack.register]], or
+  * injected via SparkSessionExtensions by [[GraftExtensions]]. */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoinPlan(lk, rk, lts, rts, l, r) =>
@@ -209,19 +208,8 @@ object AsofJoinNative {
   def asofJoin(left: DataFrame, right: DataFrame,
                leftKey: String, rightKey: String,
                leftTs: String, rightTs: String): DataFrame = {
-    val spark = left.sparkSession
-    // check-then-append must be atomic: two threads building as-of
-    // joins concurrently would otherwise both pass the contains() and
-    // register twice. (GraftExtensions-built sessions already carry
-    // both — this path covers plain sessions.)
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ AsofJoinStrategy
-      if (!spark.experimental.extraOptimizations.contains(AsofJoinFilterPushdown))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ AsofJoinFilterPushdown
-    }
+    NativeStack.register(left.sparkSession, AsofJoinStrategy,
+      Some(AsofJoinFilterPushdown))
     val lPlan = CatalystBridge.analyzed(left)
     val rPlan0 = CatalystBridge.analyzed(right)
     // self-join lineage: duplicate exprIds across the two sides break

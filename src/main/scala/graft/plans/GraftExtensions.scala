@@ -3,6 +3,9 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** SQL-door registration for the engine's native expressions, so
   * `spark.sql("SELECT text_fingerprint(text) …")` works alongside the
@@ -13,16 +16,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - `GraftFunctions.register(spark)` on a live session (same
   *    registry, no restart).
   *
-  * Two planner Strategies are injected — [[AsofJoinStrategy]] and
-  * [[RangeJoinStrategy]], planning the custom whole-operator nodes
-  * (as-of join has no Spark builtin; the equi+range join's builtin
-  * plan re-filters whole key groups — see [[AsofJoinNative]] /
-  * [[RangeJoinNative]]) — plus the optimizer Rules those nodes need,
-  * [[AsofJoinFilterPushdown]] / [[RangeJoinFilterPushdown]] (Catalyst
-  * can't push predicates through a node it doesn't know). Every other graft
-  * operator is expressible as a declarative plan over these
-  * expressions, so Catalyst's own planning stays authoritative
-  * (SURVEY.md §4).
+  * The engine has three custom Catalyst stacks (logical node, planner
+  * Strategy, physical operator): [[AsofJoinNative]] (as-of join has no
+  * Spark builtin), [[RangeJoinNative]] (the equi+range join's builtin
+  * plan re-filters whole key groups) and [[LshBandJoinNative]] (LSH
+  * band-bucket pairs in one Exchange). Each registers itself on its
+  * session the first time one of its nodes is built, through
+  * [[NativeStack.register]]. This extension also injects the as-of and
+  * range stacks — [[AsofJoinStrategy]] / [[RangeJoinStrategy]] plus the
+  * optimizer Rules those nodes need, [[AsofJoinFilterPushdown]] /
+  * [[RangeJoinFilterPushdown]] (Catalyst can't push predicates through
+  * a node it doesn't know). Every other graft operator is expressible
+  * as a declarative plan over these expressions, so Catalyst's own
+  * planning stays authoritative (SURVEY.md §4).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -31,6 +37,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => AsofJoinFilterPushdown)
     ext.injectPlannerStrategy(_ => RangeJoinStrategy)
     ext.injectOptimizerRule(_ => RangeJoinFilterPushdown)
+  }
+}
+
+/** First-use registration of one native stack on a live session, the
+  * Pathling `SqlStrategy.setup` pattern: append the planner Strategy,
+  * and the optimizer Rule if the stack has one, unless already present.
+  * Idempotent, so every node constructor calls it; a session that never
+  * builds a native node plans exactly as a plain session.
+  *
+  * The check reads only `spark.experimental`, not strategies injected
+  * through [[GraftExtensions]], so a session built with the extension
+  * gets a second copy of the as-of / range stack on first use. That is
+  * harmless: both copies plan the node identically.
+  */
+object NativeStack {
+  def register(spark: SparkSession, strategy: SparkStrategy,
+               rule: Option[Rule[LogicalPlan]] = None): Unit = {
+    val ex = spark.experimental
+    // check-then-append must be atomic: two threads building nodes
+    // concurrently would otherwise both pass contains() and append twice
+    ex.synchronized {
+      if (!ex.extraStrategies.contains(strategy))
+        ex.extraStrategies = ex.extraStrategies :+ strategy
+      rule.foreach { r =>
+        if (!ex.extraOptimizations.contains(r))
+          ex.extraOptimizations = ex.extraOptimizations :+ r
+      }
+    }
   }
 }
 

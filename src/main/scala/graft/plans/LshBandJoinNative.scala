@@ -270,12 +270,7 @@ object LshBandJoinNative {
     * happens by construction. */
   def bandPairs(banded: DataFrame, bandCol: String, bsigCol: String,
                 idCol: String): DataFrame = {
-    val spark = banded.sparkSession
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(LshBandPairsStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ LshBandPairsStrategy
-    }
+    NativeStack.register(banded.sparkSession, LshBandPairsStrategy)
     val plan = CatalystBridge.analyzed(
       banded.select(bandCol, bsigCol, idCol))
     val Seq(band, bsig, id) = plan.output

@@ -293,14 +293,7 @@ object RangeJoinNative {
                 leftKey: String, rightKey: String,
                 valueCol: String, loCol: String, hiCol: String): DataFrame = {
     val spark = left.sparkSession
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ RangeJoinStrategy
-      if (!spark.experimental.extraOptimizations.contains(RangeJoinFilterPushdown))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ RangeJoinFilterPushdown
-    }
+    NativeStack.register(spark, RangeJoinStrategy, Some(RangeJoinFilterPushdown))
     val lPlan = CatalystBridge.analyzed(left)
     val rPlan0 = CatalystBridge.analyzed(right)
     // self-join lineage: re-alias the right side fresh (as the join

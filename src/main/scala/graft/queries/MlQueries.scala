@@ -943,18 +943,6 @@ object MlQueries extends QueryModule {
     * the plain contrast is ~1.25 B pairs per cell at sf10 while this
     * path verifies 2 000 reps. Oracle replays the weighted rounds
     * and the rep-level drop digit-for-digit. */
-  /** [[qDedupSemantic]] with the within-cluster verify through the
-    * unary native cluster-pairs node ([[graft.plans
-    * .ClusterPairsNative]]) — one Exchange of the labeled frame where
-    * the self-join pays two, pairs streamed from one clustered-sorted
-    * pass, the cosine predicate the identical codegen'd Filter above
-    * the node. Gated by the SAME oracle as the composed query — the
-    * two pair enumerations must agree row-for-row. */
-  private def qDedupSemanticNative(implicit s: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.semanticDedupNative(embs, "vec_id", "embedding",
-        k = 4, iters = 2, tau = SemTau)
-      .orderBy(col("vec_id"))
-
   private def qDedupSemanticScalable(implicit s: SparkSession, dir: String): DataFrame =
     graft.operators.Similarity.semanticDedupScalable(embs, "vec_id", "embedding",
         k = 4, iters = 2, tau = SemTau)
@@ -1022,7 +1010,6 @@ object MlQueries extends QueryModule {
   override def queries: Seq[Q] = Seq(
     Q("q_kmeans", (s, d) => qKmeans(s, d), None),
     Q("q_dedup_semantic", (s, d) => qDedupSemantic(s, d), Some(qDedupSemanticSql)),
-    Q("q_dedup_semantic_native", (s, d) => qDedupSemanticNative(s, d), Some(qDedupSemanticSql)),
     Q("q_dedup_semantic_scalable", (s, d) => qDedupSemanticScalable(s, d), Some(qDedupSemanticScalableSql)),
     Q("q_kmeans_exact", (s, d) => qKmeansExact(s, d), Some(qKmeansExactSql)),
     Q("q_cluster_select_exact", (s, d) => qClusterSelectExact(s, d), Some(qClusterSelectExactSql)),

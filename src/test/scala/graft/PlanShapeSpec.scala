@@ -305,4 +305,24 @@ class PlanShapeSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
+
+  test("native stacks register once each, however many nodes are built") {
+    import graft.plans._
+    val s = spark
+    import s.implicits._
+    val l = Seq((1L, 5L)).toDF("k", "t")
+    val r = Seq((1L, 3L, 7L)).toDF("rk", "lo", "hi")
+    val banded = Seq((0, 11L, 1L), (0, 11L, 2L)).toDF("band", "bsig", "id")
+    for (_ <- 1 to 2) {
+      AsofJoinNative.asofJoin(l, r, "k", "rk", "t", "lo")
+      RangeJoinNative.rangeJoin(l, r, "k", "rk", "t", "lo", "hi")
+      LshBandJoinNative.bandPairs(banded, "band", "bsig", "id")
+    }
+    val strategies = spark.experimental.extraStrategies
+    val rules = spark.experimental.extraOptimizations
+    for (st <- Seq(AsofJoinStrategy, RangeJoinStrategy, LshBandPairsStrategy))
+      assert(strategies.count(_ eq st) == 1, s"$st in $strategies")
+    for (rule <- Seq(AsofJoinFilterPushdown, RangeJoinFilterPushdown))
+      assert(rules.count(_ eq rule) == 1, s"$rule in $rules")
+  }
 }
